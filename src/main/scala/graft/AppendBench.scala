@@ -194,7 +194,7 @@ object AppendBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/testdata_sf1")
     val scratch = args.drop(1).headOption.getOrElse("/tmp/graft-appendbench")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local(GraftSession.cpus)
     val results =
       try families().map { fam =>
         val r = runFamily(spark, sfDir, scratch, fam)

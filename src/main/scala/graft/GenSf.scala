@@ -40,15 +40,15 @@ object GenSf {
       // scale-up mode: the mode word only wins when no such dir exists.
       case Array("clustered", out, nS)
           if !java.nio.file.Files.isDirectory(java.nio.file.Paths.get("clustered")) =>
-        val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
+        val spark = GraftSession.local(GraftSession.cpus)
         try clusteredEmbeddings(spark, out, nS.toLong) finally spark.stop()
       // planted-near-dup mode: `runMain graft.GenSf neardup <outDir> <n>`
       case Array("neardup", out, nS)
           if !java.nio.file.Files.isDirectory(java.nio.file.Paths.get("neardup")) =>
-        val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
+        val spark = GraftSession.local(GraftSession.cpus)
         try nearDupEmbeddings(spark, out, nS.toLong) finally spark.stop()
       case Array(src, out, copiesS) =>
-        val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
+        val spark = GraftSession.local(GraftSession.cpus)
         try generate(spark, src, out, copiesS.toInt) finally spark.stop()
       case _ =>
         System.err.println(

@@ -3,8 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session factory carrying the engine's optimizer/runtime tuning —
-  * one place, shared by Bench / Verify / ExplainQ / tests. */
+  * one place, shared by Bench / Verify / Profile / tests. */
 object GraftSession {
+
+  /** Local parallelism of every main: SPARK_GRAFT_CPUS, else every core
+    * the JVM sees. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
 
   /** Catalyst rules this engine excludes, with reasons:
     *

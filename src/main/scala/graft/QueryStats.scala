@@ -44,22 +44,36 @@ object QueryStats {
 
   /** Scan metrics of an already-executed frame. */
   def of(df: DataFrame, wallSec: Double = 0.0): QueryStats = {
-    val leaves = fileScans(df.queryExecution.executedPlan)
+    val leaves = planNodes(df.queryExecution.executedPlan)
+      .collect { case s: FileSourceScanExec => s }.distinct
     def sum(metric: String): Long =
       leaves.map(_.metrics.get(metric).map(_.value).getOrElse(0L)).sum
     QueryStats(wallSec, sum("numOutputRows"), sum("numFiles"),
       sum("filesSize"), leaves.size)
   }
 
-  /** All file scans in the plan, reaching through AQE wrappers, query
-    * stages, reused exchanges, and subqueries. */
-  private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-    case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-    case q: QueryStageExec => fileScans(q.plan)
-    case r: ReusedExchangeExec => fileScans(r.child)
-    case s: FileSourceScanExec => Seq(s)
-    case other =>
-      (other.children.flatMap(fileScans) ++
-        other.subqueries.flatMap(fileScans)).distinct
+  /** Every operator of a physical plan, each instance once, reaching
+    * through AQE wrappers (the current — after execution, the final —
+    * plan), query stages, reused exchanges and subqueries. A plain
+    * `collect` stops at `AdaptiveSparkPlanExec` and at every stage;
+    * this is the one walk the scan stats, [[Profile]]'s exchange
+    * counts and its scan-filter audit share. */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    val out = Seq.newBuilder[SparkPlan]
+    def walk(n: SparkPlan): Unit = if (seen.add(n)) {
+      out += n
+      n match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => walk(q.plan)
+        case r: ReusedExchangeExec => walk(r.child)
+        case other =>
+          other.children.foreach(walk)
+          other.subqueries.foreach(walk)
+      }
+    }
+    walk(p)
+    out.result()
   }
 }

@@ -127,7 +127,7 @@ object Recall {
   def main(args: Array[String]): Unit = {
     val targets =
       if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local(GraftSession.cpus)
     try {
       val lines = targets.flatMap { t =>
         val (label, dir) = resolve(spark, t)

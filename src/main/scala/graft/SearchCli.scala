@@ -150,7 +150,7 @@ object SearchCli {
 
   def main(argv: Array[String]): Unit = {
     val a = parseArgs(argv)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = GraftSession.local(GraftSession.cpus)
     try run(spark, a) finally spark.stop()
   }
 

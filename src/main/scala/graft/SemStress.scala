@@ -24,7 +24,7 @@ object SemStress {
     val d5n = args.headOption.map(_.toLong).getOrElse(150000L)
     val bigN = args.drop(1).headOption.map(_.toLong).getOrElse(2200000L)
     val out = sys.env.getOrElse("SPARK_GRAFT_STRESS_OUT", "SEMSTRESS.json")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local(GraftSession.cpus)
     graft.functions.vectors.register(spark)
     def timed(f: => Long): (Double, Long) = {
       val t0 = System.nanoTime; val r = f

@@ -180,6 +180,16 @@ object SparkEntry {
     "c22_dsir" -> (Dsir.c22Query _),
   )
 
+  /** Registered query names, sorted, narrowed to the comma-separated
+    * name prefixes in SPARK_GRAFT_BENCH_ONLY when it is set — the one
+    * selector [[Bench]], [[Profile]] and [[Verify]] share (the driver
+    * never sets it, so its runs cover every query). */
+  def selected: Seq[String] = {
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    queries.keys.toSeq.sorted.filter(n => only.forall(_.exists(n.startsWith)))
+  }
+
   private def vec(seed: Int): String = VectorSearch.sqlArray(VectorSearch.qvec(seed))
 
   /** Driver default: the contract's dirless `oracleSql` assumes the

@@ -787,6 +787,10 @@ object Dedup {
     * never itself collect more than its own bound. */
   def dupClustersAuto(pairs: DataFrame,
       switchEdges: Long = StarSwitchEdges): DataFrame = {
+    // both bounded fetches below must fit an Int limit; a clamped fetch
+    // would pass a truncated edge set off as the complete one
+    require(switchEdges < Int.MaxValue / 2,
+      s"dupClustersAuto: switchEdges=$switchEdges must be < ${Int.MaxValue / 2}")
     // cast in the SHARED prep: the driver path reads raw longs
     // (row.getLong), so an integer-typed doc id must widen here or the
     // public API's behavior would depend on input size (the star path
@@ -810,17 +814,14 @@ object Dedup {
     // did compute are persisted and the rest replay from the pair
     // pipeline's still-live shuffle stages, which the scheduler skips —
     // the pipeline itself never re-runs.
-    val limE = (switchEdges + 1).min(Int.MaxValue.toLong).toInt
-    val es = edges.limit(limE).collect()
+    val es = edges.limit((switchEdges + 1).toInt).collect()
     lazy val nodes = p.select(col("doc_a").as("id"))
       .union(p.select(col("doc_b").as("id"))).distinct()
     // same one-job gate+fetch for the node side (the self-pair guard):
     // ≤ 2k+2 nodes can touch ≤ k canonical edges, anything above means
     // a pathological self-pair flood — star path
-    lazy val ns: Array[Long] = {
-      val limN = (2 * switchEdges + 3).min(Int.MaxValue.toLong).toInt
-      nodes.limit(limN).collect().map(_.getLong(0))
-    }
+    lazy val ns: Array[Long] =
+      nodes.limit((2 * switchEdges + 3).toInt).collect().map(_.getLong(0))
     if (es.length <= switchEdges && ns.length <= 2 * switchEdges + 2) {
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
@@ -881,9 +882,9 @@ object Dedup {
     // filter over derived text: routing the excerpt through
     // docShingles would push its ≥3-tokens prefilter below the union
     // with the whole excerpt-building expression substituted into the
-    // scan filter (the round-2 pathology ExplainQ --audit flags). The
-    // <3-token guard is a projection CASE instead; empty arrays
-    // explode to nothing, which is exactly the filter's semantics.
+    // scan filter (the round-2 pathology Profile's heavy-filter audit
+    // flags). The <3-token guard is a projection CASE instead; empty
+    // arrays explode to nothing, which is exactly the filter's semantics.
     val sliced = slice(t, lit(1), excerptLen(t))
     val excerptSh = graft.Spread.ifNarrow(base.filter(col("doc_id") % 25 === 0))
       .select((col("doc_id") + lit(2000000L)).as("doc_id"),
@@ -1179,10 +1180,6 @@ object Dedup {
     * distance checks per vector (corpus-independent by construction),
     * so the index trades 8× more vector math for 8× fewer files. */
   val SemIndexTargetCell = 256
-
-  def semIndexK(n: Long): Int =
-    math.min(SemMaxK, math.max(SemMinK,
-      math.ceil(n.toDouble / SemIndexTargetCell).toInt))
 
   def semIndexKTotal(n: Long): Long =
     math.min(SemMaxK.toLong * SemMaxK, math.max(SemMinK.toLong,

@@ -201,7 +201,7 @@ object EventStream {
     * wall-clock into harness fixed overhead vs real plan work, so a
     * genuine maintenance/serve regression can't hide inside (or be
     * faked by) stream-startup noise — BASELINE's streaming-phase
-    * table; Bench records it under SPARK_GRAFT_BENCH_STREAM_PHASES. */
+    * table; [[graft.Profile]] reports it as startup/maintain. */
   val lastPhases = new java.util.concurrent.ConcurrentHashMap[
     String, (Double, Double)]()
 

@@ -683,4 +683,22 @@ class PlanAuditSpec extends SparkSpec {
     a3d should include("SPARK_PARTITION_ID")
     a3d should not include "SortMergeJoin"
   }
+
+  /** The pair-dedup family's shared posting exchange (d2) and shared
+    * embedding shuffle (d5) run ONCE only because a throwaway parity
+    * column survives pruning behind a filter Catalyst does not fold
+    * (`x >= Long.MinValue || isNull`, Dedup.scala). A rule that folded
+    * it would silently split the exchange again; this pins the reuse
+    * and the job counts in the final adaptive plan. */
+  test("d2/d5 final plans reuse their shared exchange") {
+    Seq("d2_ngram_jaccard" -> 7, "d5_embedding_neardup" -> 5).foreach {
+      case (q, maxJobs) =>
+        val p = Profile.of(spark, SparkSpec.TinySf, q)
+        withClue(q) {
+          p.reusedExchanges should be >= 1
+          p.finalPlan should include("ReusedExchange")
+          p.jobs should be <= maxJobs
+        }
+    }
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.FilterExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.Ann
@@ -34,5 +36,17 @@ class QueryStatsSpec extends SparkSpec {
     val stats = QueryStats.run(joined)
     stats.scans shouldBe 2
     stats.rowsRead shouldBe docs.count() + embs.count()
+  }
+
+  test("planNodes reaches a filter inside the executed AQE plan") {
+    val agg = Tables.lineitem(spark, SparkSpec.TinySf)
+      .filter(col("l_quantity") > 10)
+      .groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))
+    agg.queryExecution.toRdd.foreach(_ => ())
+    val plan = agg.queryExecution.executedPlan
+    plan shouldBe an[AdaptiveSparkPlanExec]
+    // a plain collect stops at the AQE wrapper; the shared walker does not
+    plan.collect { case f: FilterExec => f } shouldBe empty
+    QueryStats.planNodes(plan).collect { case f: FilterExec => f } should not be empty
   }
 }

@@ -196,6 +196,12 @@ class DedupSpec extends SparkSpec {
     ids shouldBe ids.sorted
   }
 
+  test("dupClustersAuto rejects a switch its Int-bounded fetches cannot honour") {
+    val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
+    an[IllegalArgumentException] should be thrownBy
+      Dedup.dupClustersAuto(pairs, switchEdges = Int.MaxValue.toLong)
+  }
+
   test("dupClustersStar matches dupClusters on a multi-component graph") {
     val pairs = Seq((1L, 2L), (2L, 5L), (7L, 9L), (9L, 3L), (12L, 12L))
       .toDF("doc_a", "doc_b")
